@@ -579,8 +579,14 @@ def _geotag_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage (6.5 vs 5.1 s at 100×). On the single-partition fixture
     scan that order would serialize the derivation, so there the raw
     rows are keyed-spread FIRST (pinned width) and derived above —
-    0.67 vs 0.92 s at sf0.1. One keyed exchange either way."""
-    ev = load_table(spark, "events", sf_dir)
+    0.67 vs 0.92 s at sf0.1. One keyed exchange either way.
+
+    The whole projection equals the union only for non-NULL
+    ``event_type``: a NULL row fails both union filters, so it is
+    dropped here too — as the bucketed arm drops it."""
+    ev = load_table(spark, "events", sf_dir).filter(
+        col("event_type").isNotNull()
+    )
     par = spark.sparkContext.defaultParallelism
     if (
         os.environ.get("SPARK_GRAFT_SCAN_SPREAD", "") != "0"

@@ -240,7 +240,23 @@ def get_session(
     ``default``/``reband`` pools — required only when the session will
     launch background maintenance (``update_emb_pair_graph`` with
     ``async_reband=True``); everything else keeps FIFO (see
-    :func:`scheduler_conf`)."""
+    :func:`scheduler_conf`). The scheduler mode is fixed when the
+    SparkContext starts, so ``fair_pools=True`` raises ``RuntimeError``
+    while a non-FAIR context is running instead of returning it —
+    before any of this call's settings touch the running session."""
+    if fair_pools:
+        from pyspark import SparkContext
+
+        running = SparkContext._active_spark_context
+        if running is not None:
+            mode = running.getConf().get("spark.scheduler.mode", "FIFO")
+            if mode.upper() != "FAIR":
+                raise RuntimeError(
+                    "get_session(fair_pools=True): a SparkContext with "
+                    f"spark.scheduler.mode={mode} is already running; the "
+                    "scheduler mode only applies at context start, so stop "
+                    "it first"
+                )
     cores = _local_cores()
     master = master or f"local[{cores}]"
     builder = (

@@ -29,6 +29,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql.functions import col
 
+from pulsar_spark_spark.sources.tables import _footer
+
 
 _POINTER = "__current"
 
@@ -51,10 +53,21 @@ def upsert_parquet(
 ) -> None:
     """Keyed upsert into a versioned parquet directory (K1 analog).
 
-    Merge discipline: per key keep the single row with the highest
-    (version_col, is_new) — new rows win ties, so replaying the same
-    micro-batch is idempotent (T3's commit-after-write guarantee
-    becomes "replay is harmless").
+    Merge discipline: ``new_rows`` may hold several rows per key. Per
+    key keep the single row with the highest (version_col, is_new)
+    over stored ∪ new rows — the highest version wins, new rows win
+    ties, so replaying the same micro-batch is idempotent (T3's
+    commit-after-write guarantee becomes "replay is harmless"). One
+    key-partitioned window does both the in-batch dedup and the merge
+    with the stored state, so a caller needs no per-key aggregate (and
+    no second shuffle) ahead of the sink.
+
+    The stored version is read with ``new_rows``' schema — the schema
+    this sink wrote it with, since the winners only drop the helper
+    columns — so reading existing state fires no schema-inference job.
+    The column sets must match exactly (checked against the stored
+    version's footer): a stored column missing from ``new_rows`` would
+    otherwise be dropped from the durable state without a word.
 
     Crash safety: state lives in ``<path>/v_<uuid>/`` subdirectories
     selected by a ``__current`` pointer file, committed with an atomic
@@ -81,7 +94,15 @@ def upsert_parquet(
 
     new_tagged = new_rows.withColumn("__is_new", F.lit(1))
     if current is not None:
-        existing = spark.read.parquet(os.path.join(path, current))
+        stored = os.path.join(path, current)
+        footer = _footer(stored)
+        if footer is not None and set(footer[0].names) != set(new_rows.columns):
+            raise ValueError(
+                "upsert_parquet: state/new_rows column mismatch — "
+                f"state {sorted(footer[0].names)} vs "
+                f"new_rows {sorted(new_rows.columns)}"
+            )
+        existing = spark.read.schema(new_rows.schema).parquet(stored)
         merged = existing.withColumn("__is_new", F.lit(0)).unionByName(new_tagged)
     else:
         merged = new_tagged

@@ -20,10 +20,18 @@ from functools import lru_cache
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import (
+    LongType,
+    StructField,
+    StructType,
+    TimestampNTZType,
+    TimestampType,
+)
 
 try:  # footer-schema probe; loader degrades to dtype-only checks without it
     import pyarrow as pa
     import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_type
 except ImportError:  # pragma: no cover - pyarrow is baked into this env
     pa = pq = None
 
@@ -44,26 +52,18 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 @lru_cache(maxsize=256)
-def _nanos_columns(path: str) -> frozenset[str]:
-    """Columns stored as parquet TIMESTAMP(NANOS), read from the file
-    footer (pyarrow), so NANOS detection follows the actual encoding
-    instead of a hardcoded column name — if a regenerated dataset ships
-    NANOS for o_orderdate/l_shipdate tomorrow, they normalize too.
+def _footer(path: str) -> "tuple[pa.Schema, bool] | None":
+    """(arrow schema, whether any column is physically INT96) of one
+    parquet footer, or None when there is none to read.
 
     ``path`` may be a single parquet file or a directory of part files
     (all parts share one schema; the first footer is authoritative).
     Memoized per path: datasets are immutable within a session and
-    load_table runs once per query branch.
+    load_table runs once per query branch, so every probe below shares
+    ONE footer read per path.
     """
     if pq is None:
-        # No footer probe available: fall back to the legacy name-based
-        # heuristic rather than silently skipping normalization — the
-        # driver's NANOS-encoded ``events.ts`` would otherwise stay a
-        # raw nanosecond bigint and every downstream ts cast would
-        # miscompute. ``_normalize_timestamps`` only acts when the
-        # column actually reads back as bigint, so this is a no-op for
-        # µs/ms-encoded datasets.
-        return frozenset({"ts"})
+        return None
     probe = path
     if os.path.isdir(path):
         # first part file anywhere under the dir — covers both flat
@@ -83,16 +83,97 @@ def _nanos_columns(path: str) -> frozenset[str]:
                 probe = os.path.join(base, parts[0])
                 break
         if probe is None:
-            return frozenset()
+            return None
     try:
-        schema = pq.read_schema(probe)
-    except Exception:
+        with pq.ParquetFile(probe) as pf:
+            pschema = pf.metadata.schema
+            int96 = any(
+                pschema.column(i).physical_type == "INT96"
+                for i in range(len(pschema))
+            )
+            return pf.schema_arrow, int96
+    except (OSError, pa.ArrowException):
+        return None
+
+
+@lru_cache(maxsize=256)
+def _nanos_columns(path: str) -> frozenset[str]:
+    """Columns stored as parquet TIMESTAMP(NANOS), read from the file
+    footer (pyarrow), so NANOS detection follows the actual encoding
+    instead of a hardcoded column name — if a regenerated dataset ships
+    NANOS for o_orderdate/l_shipdate tomorrow, they normalize too.
+    """
+    if pq is None:
+        # No footer probe available: fall back to the legacy name-based
+        # heuristic rather than silently skipping normalization — the
+        # NANOS-encoded ``events.ts`` would otherwise stay a
+        # raw nanosecond bigint and every downstream ts cast would
+        # miscompute. ``_normalize_timestamps`` only acts when the
+        # column actually reads back as bigint, so this is a no-op for
+        # µs/ms-encoded datasets.
+        return frozenset({"ts"})
+    footer = _footer(path)
+    if footer is None:
         return frozenset()
     return frozenset(
         f.name
-        for f in schema
+        for f in footer[0]
         if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
     )
+
+
+def _has_timestamp(t: "pa.DataType") -> bool:
+    if pa.types.is_timestamp(t):
+        return True
+    return any(_has_timestamp(t.field(i).type) for i in range(t.num_fields))
+
+
+def _footer_spark_schema(path: str, infer_ntz: bool) -> "StructType | None":
+    """The schema Spark would infer for a single-file table, derived
+    from its footer instead — inference fires a Spark job per read,
+    while the footer is the one :func:`_nanos_columns` reads too
+    (cached by :func:`_footer`).
+
+    Mirrors Spark's parquet inference under the loader's confs:
+    TIMESTAMP(NANOS) → ``bigint`` (``nanosAsLong``, set by
+    :func:`load_table`), tz-naive timestamps → ``timestamp_ntz`` when
+    ``infer_ntz`` (``spark.sql.parquet.inferTimestampNTZ.enabled``),
+    everything else via pyspark's Arrow type mapping. Returns None —
+    plain inference — for directories (part files may evolve) and for
+    anything it cannot map exactly: INT96, timestamps nested in
+    complex types, unsigned integers and other types Arrow maps
+    differently.
+    """
+    if os.path.isdir(path):
+        return None
+    footer = _footer(path)
+    if footer is None or footer[1]:
+        return None
+    fields = []
+    for f in footer[0]:
+        t = f.type
+        if pa.types.is_timestamp(t):
+            if t.unit == "ns":
+                dt = LongType()
+            elif t.tz is None and infer_ntz:
+                dt = TimestampNTZType()
+            else:
+                dt = TimestampType()
+        elif (
+            _has_timestamp(t)
+            or pa.types.is_binary(t)
+            or pa.types.is_large_binary(t)
+        ):
+            # binary follows spark.sql.parquet.binaryAsString; nested
+            # timestamps follow rules this mapping does not mirror
+            return None
+        else:
+            try:
+                dt = from_arrow_type(t)
+            except TypeError:  # no Spark type for it (e.g. unsigned ints)
+                return None
+        fields.append(StructField(f.name, dt, True))
+    return StructType(fields)
 
 
 def _normalize_timestamps(df: DataFrame, nanos_cols: set[str] = frozenset()) -> DataFrame:
@@ -172,8 +253,15 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
     # it the read fails outright under a plain driver-built session.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    df = spark.read.parquet(path)
-    return _normalize_timestamps(df, _nanos_columns(path))
+    # A footer-derived schema skips the schema-inference job a plain
+    # read fires; directories and unmapped types still infer.
+    schema = _footer_spark_schema(
+        path,
+        spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
+        == "true",
+    )
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return _normalize_timestamps(reader.parquet(path), _nanos_columns(path))
 
 
 def register_views(

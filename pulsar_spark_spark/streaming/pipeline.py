@@ -160,20 +160,35 @@ def run_dedup_upsert_stream(
 ) -> StreamingQuery:
     """A2-dedup each micro-batch and upsert into keyed parquet state.
 
-    Per batch: keep the newest event per (user_id, event_type) —
-    ``max_by`` over (ts, event_id) — then merge into the state table
-    keyed on (user_id, event_type) with the event's (ts, event_id) as
-    the version. Replayed batches (crash between sink write and WAL
-    commit) re-apply the same winners: idempotent, hence the
-    commit-after-write guarantee of the reference (T3) without its
-    failure window.
+    Per batch: validate, project each event to its state row with the
+    event's (ts, event_id) as the version, and hand the rows straight
+    to the keyed sink (sources/sinks.py::upsert_parquet). The sink's
+    one key-partitioned window keeps the newest row per
+    (user_id, event_type) over stored state ∪ the whole batch, so the
+    in-batch dedup and the merge share ONE shuffle — no per-batch
+    aggregate runs ahead of it. Replayed batches (crash between sink
+    write and WAL commit) re-apply the same rows: idempotent, hence
+    the commit-after-write guarantee of the reference (T3) without
+    its failure window.
+
+    The version is the struct (unix_micros(ts), event_id), not ts
+    alone: it is the ONLY ordering the dedup sees, inside a batch and
+    across batches alike. With a bare ts version, two
+    same-microsecond events for a key would tie, and the sink's
+    new-wins-ties rule would let the later-arriving (lower event_id)
+    row win across a batch boundary — and an arbitrary one within a
+    batch — violating the A2 "newest per (ts, event_id)" contract the
+    batch arm keeps.
 
     With ``state_table`` set, the state is a (user_id, event_type)-
     bucketed catalog table (sources/bucketed.py::upsert_bucketed): the
     per-batch merge reads the accumulated state bucket-partitioned —
     no Exchange on the state side — and only the micro-batch's
-    deduped winners shuffle. Same opt-in as the rescore stream's.
+    deduped winners shuffle. That merge is a full-outer join which
+    needs unique keys, so this arm keeps a per-key newest-row
+    aggregate ahead of the sink. Same opt-in as the rescore stream's.
     """
+    keys = ["user_id", "event_type"]
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         # P8: null-guard before the sink (the reference validates its
@@ -184,46 +199,30 @@ def run_dedup_upsert_stream(
         batch_df, _rejected = validate_for_sink(
             batch_df, ["user_id", "event_type", "ts"]
         )
-        latest = (
-            batch_df.groupBy("user_id", "event_type")
-            .agg(
-                F.max_by(
-                    F.struct("ts", "event_id", "value"),
-                    F.struct("ts", "event_id"),
-                ).alias("newest")
-            )
-            .select(
-                "user_id",
-                "event_type",
-                col("newest.ts").alias("ts"),
-                col("newest.event_id").alias("event_id"),
-                col("newest.value").alias("value"),
-            )
-            # the version must order EXACTLY like the in-batch max_by
-            # — (ts, event_id), not ts alone: with a bare unix_micros
-            # version, two same-microsecond events for a key straddling
-            # a batch boundary let the LATER-ARRIVING (lower event_id)
-            # row win the sink's new-wins-ties rule, violating the A2
-            # "newest per (ts, event_id)" contract the batch arm keeps
-            .withColumn(
-                "version",
-                F.struct(
-                    F.unix_micros("ts").alias("t"),
-                    col("event_id").alias("e"),
-                ),
-            )
+        rows = batch_df.select(
+            *keys,
+            "ts",
+            "event_id",
+            "value",
+            F.struct(
+                F.unix_micros("ts").alias("t"),
+                col("event_id").alias("e"),
+            ).alias("version"),
         )
         if state_table:
             from pulsar_spark_spark.sources.bucketed import upsert_bucketed
 
+            newest = (
+                rows.groupBy(*keys)
+                .agg(F.max_by(F.struct(*rows.columns), "version").alias("n"))
+                .select("n.*")
+            )
             upsert_bucketed(
-                latest, state_table, state_path,
-                ["user_id", "event_type"], "version", n_buckets=n_buckets,
+                newest, state_table, state_path, keys, "version",
+                n_buckets=n_buckets,
             )
         else:
-            upsert_parquet(
-                latest, state_path, ["user_id", "event_type"], "version"
-            )
+            upsert_parquet(rows, state_path, keys, "version")
 
     return (
         events.writeStream.foreachBatch(process_batch)

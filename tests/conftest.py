@@ -34,3 +34,20 @@ def duck():
             con.execute(f"CREATE VIEW {name} AS SELECT * FROM '{path}'")
     yield con
     con.close()
+
+
+def jobs_fired(spark, fn) -> int:
+    """Number of Spark jobs ``fn()`` fires, counted in a job group of
+    its own once the listener bus has caught up."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs_fired_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))

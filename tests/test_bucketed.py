@@ -955,3 +955,40 @@ def test_merge_with_state_null_version_rows(spark):
         2: ("n2", None),   # new key lands intact, NOT all-NULL
         3: ("n3", 7),      # plain new key
     }
+
+
+def test_geotag_arms_drop_null_event_type(spark, tmp_path, monkeypatch):
+    """A NULL ``event_type`` row is neither state (``!= 'purchase'``)
+    nor batch (``== 'purchase'``) in the reference's union, so both
+    geotag arms must exclude it — and agree with each other."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pulsar_spark_spark.plans import QUERIES
+    from tests.conftest import SF_DIR_SMALL
+
+    ev = pq.read_table(f"{SF_DIR_SMALL}/events.parquet")
+    newest = ev.sort_by([("ts", "descending")]).slice(0, 1).to_pylist()[0]
+    ghost_id = max(ev.column("event_id").to_pylist()) + 1
+    # the user's newest point, so it would land inside the cap-100
+    ghost = dict(newest, event_id=ghost_id, event_type=None)
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    pq.write_table(
+        pa.concat_tables([ev, pa.Table.from_pylist([ghost], ev.schema)]),
+        str(sf / "events.parquet"),
+    )
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_ROOT", str(tmp_path / "idx"))
+    got = {}
+    try:
+        for arm in ("plain", "bucketed"):
+            monkeypatch.setenv("SPARK_GRAFT_GEOTAG_ARM", arm)
+            got[arm] = sorted(
+                QUERIES["geotag_history_merge"](spark, str(sf)).collect()
+            )
+    finally:
+        for t in [r["tableName"] for r in spark.sql("SHOW TABLES").collect()]:
+            if t.startswith("geotag_state"):
+                spark.sql(f"DROP TABLE IF EXISTS {t}")
+    assert got["plain"] == got["bucketed"] and got["plain"]
+    assert ghost_id not in {r["event_id"] for r in got["plain"]}

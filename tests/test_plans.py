@@ -296,6 +296,19 @@ def test_fair_pools_scoped_to_optin_sessions(spark):
     assert '"spark.scheduler.pool", "reband"' in src
 
 
+def test_fair_pools_refuses_running_fifo_session(spark):
+    """``get_session(fair_pools=True)`` must not hand back the running
+    FIFO session (the scheduler mode only applies at context start),
+    and must refuse before touching that session's settings."""
+    from pulsar_spark_spark.session import get_session
+
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    with pytest.raises(RuntimeError, match="spark.scheduler.mode=FIFO"):
+        get_session(fair_pools=True)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    assert spark.conf.get("spark.scheduler.mode", "FIFO") == "FIFO"
+
+
 def test_select_state_store_auto_rule(spark, monkeypatch):
     """Round 14 (r13 VERDICT missing #4): the state-store provider
     auto-selects from estimated per-box state cardinality at the

@@ -47,6 +47,42 @@ def test_upsert_stale_version_loses(spark, tmp_path):
     assert len(got) == 1 and got[0]["v"] == "new" and got[0]["version"] == 9
 
 
+def test_upsert_state_read_fires_no_job(spark, tmp_path):
+    """The stored version is read with the sink's own schema, so an
+    upsert onto existing state fires no more jobs (no schema
+    inference) than the first upsert onto empty state."""
+    from tests.conftest import jobs_fired
+
+    path = str(tmp_path / "state")
+    first = jobs_fired(
+        spark,
+        lambda: upsert_parquet(_df(spark, [(1, "a", 1)]), path, ["k"], "version"),
+    )
+    onto_state = jobs_fired(
+        spark,
+        lambda: upsert_parquet(
+            _df(spark, [(1, "a2", 2), (2, "b", 2)]), path, ["k"], "version"
+        ),
+    )
+    assert 0 < onto_state <= first
+    got = {r["k"]: r["v"] for r in read_upsert_table(spark, path).collect()}
+    assert got == {1: "a2", 2: "b"}
+
+
+def test_upsert_rejects_column_drift(spark, tmp_path):
+    """A stored column missing from the new rows must be a hard error,
+    never a silent drop from the durable state."""
+    import pytest
+
+    path = str(tmp_path / "state")
+    upsert_parquet(_df(spark, [(1, "a", 1)]), path, ["k"], "version")
+    narrow = spark.createDataFrame([(1, 2)], "k bigint, version bigint")
+    with pytest.raises(ValueError, match="column mismatch"):
+        upsert_parquet(narrow, path, ["k"], "version")
+    got = {r["k"]: r["v"] for r in read_upsert_table(spark, path).collect()}
+    assert got == {1: "a"}
+
+
 def test_upsert_survives_interrupted_write(spark, tmp_path):
     """A writer that died mid-upsert (version dir written, pointer not
     committed — or pointer temp left behind) must not lose or corrupt

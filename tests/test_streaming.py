@@ -363,11 +363,13 @@ def test_budgeted_events_dir_user_mod(spark, tmp_path, monkeypatch):
 
 def test_dedup_version_orders_by_event_id_across_batches(spark, tmp_path):
     """Round 14 review fix: the upsert version must order exactly like
-    the in-batch max_by — (ts, event_id), not ts alone. Two
+    the batch arm's max_by — (ts, event_id), not ts alone. Two
     same-timestamp events for one key arriving in DIFFERENT batches
     used to let the later-arriving lower event_id win the sink's
     new-wins-ties rule; the batch arm (both in one batch) kept the
-    higher event_id."""
+    higher event_id. Second input: the sink's window also does the
+    in-batch dedup, so two same-ts rows plus an older one in ONE
+    batch must keep the higher event_id as well."""
     import datetime
 
     schema = (
@@ -375,25 +377,35 @@ def test_dedup_version_orders_by_event_id_across_batches(spark, tmp_path):
         "ts timestamp, value double"
     )
     t = datetime.datetime(2026, 1, 1, 12, 0, 0)
-    input_dir = str(tmp_path / "incoming")
-    state = str(tmp_path / "state")
-    ckpt = str(tmp_path / "ckpt")
+    older = t - datetime.timedelta(seconds=1)
 
-    def arrive(rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(input_dir)
-        ev = stream_events(
-            spark, input_dir, spark.read.parquet(input_dir).schema
-        )
-        q = run_dedup_upsert_stream(ev, state, ckpt)
-        q.awaitTermination(120)
-        assert not q.isActive
+    def run(tag, batches):
+        input_dir = str(tmp_path / tag / "incoming")
+        state = str(tmp_path / tag / "state")
+        ckpt = str(tmp_path / tag / "ckpt")
+        for rows in batches:
+            spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+                "append"
+            ).parquet(input_dir)
+            ev = stream_events(
+                spark, input_dir, spark.read.parquet(input_dir).schema
+            )
+            q = run_dedup_upsert_stream(ev, state, ckpt)
+            q.awaitTermination(120)
+            assert not q.isActive
+        return {
+            (r["user_id"], r["event_type"]): (r["event_id"], r["value"])
+            for r in read_upsert_table(spark, state).collect()
+        }
 
-    arrive([(1, 9, "click", t, 1.0)])
-    arrive([(1, 3, "click", t, 2.0)])  # same ts, lower event_id, later batch
-    got = {
-        (r["user_id"], r["event_type"]): r["event_id"]
-        for r in read_upsert_table(spark, state).collect()
-    }
-    assert got == {(1, "click"): 9}
+    across = run("across", [
+        [(1, 9, "click", t, 1.0)],
+        [(1, 3, "click", t, 2.0)],  # same ts, lower event_id, later batch
+    ])
+    assert across == {(1, "click"): (9, 1.0)}
+    within = run("within", [[
+        (1, 3, "click", t, 2.0),
+        (1, 9, "click", t, 1.0),
+        (1, 12, "click", older, 3.0),  # highest event_id, older ts
+    ]])
+    assert within == {(1, "click"): (9, 1.0)}

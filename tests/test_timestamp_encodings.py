@@ -118,3 +118,23 @@ def test_nanos_columns_no_pyarrow_falls_back_to_name_heuristic(tmp_path, monkeyp
         assert tables._nanos_columns(str(tmp_path)) == {"ts"}
     finally:
         tables._nanos_columns.cache_clear()
+
+
+@pytest.mark.parametrize("scale", ["sf0.001", "sf0.01", "sf0.1"])
+def test_footer_schema_matches_inference(spark, scale):
+    """The footer-derived schema equals the schema Spark infers, for
+    every catalog table, and load_table fires no job to get it."""
+    import os
+
+    from pulsar_spark_spark.sources.tables import TABLES, _footer_spark_schema
+    from tests.conftest import SF_DIR_SMALL, jobs_fired
+
+    sf = os.path.join(os.path.dirname(SF_DIR_SMALL), scale)
+    names = [t for t in TABLES if os.path.exists(f"{sf}/{t}.parquet")]
+    assert names
+    # nanosAsLong is set by the loader; infer under the same confs
+    load_table(spark, names[0], sf)
+    for name in names:
+        path = f"{sf}/{name}.parquet"
+        assert _footer_spark_schema(path, True) == spark.read.parquet(path).schema, name
+    assert jobs_fired(spark, lambda: [load_table(spark, n, sf) for n in names]) == 0
